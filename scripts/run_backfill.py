@@ -4,8 +4,7 @@ Deployment (north rule):
     python scripts/package_pyfiles.py /tmp/zcs.zip
     spark-submit --py-files /tmp/zcs.zip scripts/run_backfill.py \
         --input <transcripts parquet/table> --output <dir> \
-        --start 2026-01-01 --end 2026-01-31 [--step-days 30]
-        [--salt-slice-hours 6 --hot-key-threshold 100000]
+        --start 2026-01-01 --end 2026-01-31 [--step-days 30] [--num-partitions N]
 
 Runs the flagship conversation-feature GroupBy over the input transcript
 table, writing date-partitioned output with JSONL lineage (resumable —

@@ -226,3 +226,61 @@ def test_matches_online_fetcher(spark, events):
                 np.testing.assert_allclose(list(g), val, atol=1e-9)
             else:
                 assert g == val, (i, nm)
+
+
+def test_all_null_distinct_count_is_null(spark):
+    """APPROX_UNIQUE_COUNT over a window whose inputs are all null is NULL in
+    compute_group_by; the batch sketch engine and the online Fetcher must
+    agree (an empty sketch estimates 0, and a distinct count of a non-empty
+    set is at least 1)."""
+    from zipline_chronon_spark.online.fetcher import (Fetcher, upload_batch_state,
+                                                      upload_stream_events)
+    from zipline_chronon_spark.online.kv import InMemoryKv
+
+    hour = 3_600_000
+    t0 = ((BASE + 86_400_000) // 300_000) * 300_000
+    t1 = t0 + 10 * hour
+    pdf = pd.DataFrame({
+        # "n": text always null, in batch tiles and stream head events
+        # "m": text only long ago; null inside the 1h window
+        # "p": text everywhere
+        "k": ["n", "n", "n", "m", "m", "m", "p", "p", "p"],
+        "ts_ms": [t0 - 3 * hour, t0 - hour, t1 - 600_000,
+                  t0 - 20 * hour, t0 - 2 * hour, t1 - 600_000,
+                  t0 - 3 * hour, t1 - 900_000, t1 - 600_000],
+        "txt": [None, None, None, "a", None, None, "x", "y", "x"],
+    }).astype({"ts_ms": "int64"})
+    spark.createDataFrame(pdf, "k string, ts_ms long, txt string") \
+        .createOrReplaceTempView("ax_null_events")
+    gb = GroupBy(
+        name="ax_null",
+        sources=(EventSource(table="ax_null_events", query=Query(time_column="ts_ms")),),
+        key_columns=("k",),
+        aggregations=(Aggregation("txt", Operation.APPROX_UNIQUE_COUNT,
+                                  windows=(None, Window(1, TimeUnit.HOURS))),),
+    )
+    cols = ["txt_approx_unique_count", "txt_approx_unique_count_1h"]
+    keys = ["n", "m", "p"]
+    q = spark.createDataFrame(pd.DataFrame({
+        "k": keys, "ts_ms": [t1] * 3, "__row_id": np.arange(3, dtype=np.int64)}))
+
+    def by_key(df):
+        return df.toPandas().sort_values("__row_id").reset_index(drop=True)[cols]
+
+    exact = by_key(compute_group_by(spark, gb, q, row_id="__row_id",
+                                    query_time_col="ts_ms"))
+    approx = by_key(compute_group_by_approx(spark, gb, q, row_id="__row_id",
+                                            query_time_col="ts_ms"))
+    kv = InMemoryKv()
+    upload_batch_state(kv, spark, gb, t0)
+    upload_stream_events(kv, spark, gb, t0, t1)
+    fetcher = Fetcher(kv, gb)
+    online = pd.DataFrame([fetcher.fetch((k,), at_ts_ms=t1) for k in keys])[cols]
+
+    # the case under test: NULL where every input is null, counts elsewhere
+    assert exact.isna().values.tolist() == [[True, True], [False, True], [False, False]]
+    assert exact.loc[2].tolist() == [2, 2]
+    for name, got in [("approx", approx), ("fetch", online)]:
+        for c in cols:
+            assert (got[c].isna() == exact[c].isna()).all(), (name, c, got[c].tolist())
+            assert (got[c].dropna() == exact[c].dropna()).all(), (name, c, got[c].tolist())

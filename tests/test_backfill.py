@@ -11,10 +11,11 @@ from pyspark.sql import functions as F
 
 from tests import specs
 from zipline_chronon_spark.api import Aggregation, GroupBy, Operation
-from zipline_chronon_spark.plans.backfill import GroupByBackfill, date_range
+from zipline_chronon_spark.plans.backfill import CHUNKS_IN_FLIGHT, GroupByBackfill, date_range
 from zipline_chronon_spark.sources.transcripts import generate_transcripts
 
 ROW_ID_EXPR = "xxhash64(conv_id, turn_idx)"
+PT = {"conv_id": "conv_id", "turn_idx": "turn_idx"}
 
 
 @pytest.fixture(scope="module")
@@ -48,6 +49,11 @@ def _read_sorted(spark, path):
     )
 
 
+def _table_counts(spark, out):
+    return {r["ds"]: r["count"] for r in spark.read.parquet(out)
+            .groupBy(F.col("ds").cast("string").alias("ds")).count().collect()}
+
+
 def test_backfill_resume_and_equivalence(spark, tset, tmp_path_factory):
     path, ds_min, ds_max = tset
     out_a = str(tmp_path_factory.mktemp("bf") / "out_whole")
@@ -62,17 +68,21 @@ def test_backfill_resume_and_equivalence(spark, tset, tmp_path_factory):
     # B: 2-day chunks (windows must look back across chunk boundaries)
     job_b = GroupByBackfill(spark, _gb(path), out_b, ROW_ID_EXPR, passthrough=pt)
     res_b = job_b.run(ds_min, ds_max, step_days=2)
-    assert len(res_b["computed_chunks"]) >= 2
+    # more chunks than run at once: later ones queue behind those in flight
+    assert len(res_b["computed_chunks"]) > CHUNKS_IN_FLIGHT
 
     a, b = _read_sorted(spark, out_a), _read_sorted(spark, out_b)
     assert len(a) == len(b) > 0
     assert a.equals(b), "step-days chunking changed the output (metamorphic failure)"
 
-    # lineage has per-partition rows + latency
+    # lineage has per-partition rows + latency; the counts observed on the
+    # written frames equal the table's
     recs = job_b.lineage.records()
     assert all(r["rows"] > 0 and r["wall_sec"] >= 0 for r in recs)
     all_ds = {ds for r in recs for ds in r["rows_per_partition"]}
     assert all_ds == set(date_range(ds_min, ds_max))
+    observed = {ds: n for r in recs for ds, n in r["rows_per_partition"].items()}
+    assert observed == _table_counts(spark, out_b)
 
     # resume: rerun -> nothing recomputed
     res_again = job_b.run(ds_min, ds_max, step_days=2)
@@ -109,3 +119,59 @@ def test_spec_change_invalidates(spark, tset, tmp_path_factory):
     job2 = GroupByBackfill(spark, gb2, out, ROW_ID_EXPR)
     assert job2.hash != job1.hash
     assert job2.unfilled(ds_min, ds_max) == date_range(ds_min, ds_max)
+
+
+class _FailingBackfill(GroupByBackfill):
+    """Raises while planning the chunk that starts on ``fail_ds``."""
+
+    fail_ds = None
+
+    def _compute_chunk(self, ds_from, ds_to):
+        if ds_from == self.fail_ds:
+            raise RuntimeError(f"chunk {ds_from} failed")
+        return super()._compute_chunk(ds_from, ds_to)
+
+
+def test_failed_chunk_keeps_finished_ones(spark, tset, tmp_path_factory):
+    path, ds_min, ds_max = tset
+    days = date_range(ds_min, ds_max)
+    one_chunk = str(tmp_path_factory.mktemp("bf") / "out_one_chunk")
+    GroupByBackfill(spark, _gb(path), one_chunk, ROW_ID_EXPR, passthrough=PT).run(
+        ds_min, ds_max, step_days=365)
+    out = str(tmp_path_factory.mktemp("bf") / "out_fail")
+    job = _FailingBackfill(spark, _gb(path), out, ROW_ID_EXPR, passthrough=PT)
+    job.fail_ds = days[2]  # chunks of 2 days: the second chunk fails
+    with pytest.raises(RuntimeError, match=f"chunk {days[2]} failed"):
+        job.run(ds_min, ds_max, step_days=2)
+
+    recorded = {ds for r in job.lineage.records() for ds in r["partitions"]}
+    assert set(days[:2]) <= recorded, "the chunk in flight was not recorded"
+    assert not recorded & set(days[2:4])
+
+    rerun = GroupByBackfill(spark, _gb(path), out, ROW_ID_EXPR, passthrough=PT).run(
+        ds_min, ds_max, step_days=2)
+    redone = sorted(ds for c in rerun["computed_chunks"] for ds in c["partitions"])
+    assert redone == sorted(set(days) - recorded)
+    assert _read_sorted(spark, out).equals(_read_sorted(spark, one_chunk))
+
+
+def test_chunk_runs_without_read_back_jobs(spark, tset, tmp_path_factory):
+    """Lineage counts come from an Observation and autoExpand from the
+    remembered schema: per chunk at most a source schema lookup, an AQE map
+    stage and the write. The chunk threads must inherit the caller's job
+    group, or none of their jobs would be counted here."""
+    path, ds_min, ds_max = tset
+    out = str(tmp_path_factory.mktemp("bf") / "out_jobs")
+    sc = spark.sparkContext
+    group = "test-backfill-jobs"
+    sc.setJobGroup(group, "backfill job count")
+    try:
+        res = GroupByBackfill(spark, _gb(path), out, ROW_ID_EXPR, passthrough=PT).run(
+            ds_min, ds_max, step_days=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_chunks = len(res["computed_chunks"])
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_chunks == 3
+    assert n_chunks <= n_jobs <= 3 * n_chunks, n_jobs

@@ -187,3 +187,88 @@ def test_backfill_covering_set_prunes_part_tables(spark, jset, tmp_path_factory)
     assert (cov["tmp_value_count"] == -7).all()
     assert (unc["tmp_value_count"].dropna() != -7).all()
     assert got["snp_value_sum_2d"].notna().sum() > 0
+
+
+def _counts_by_ds(spark, table):
+    from pyspark.sql import functions as F
+
+    return {r["ds"]: r["count"] for r in spark.read.parquet(table)
+            .groupBy(F.col("ds").cast("string").alias("ds")).count().collect()}
+
+
+def test_pipelined_chunks_match_one_chunk(spark, jset, tmp_path_factory):
+    """Two-day chunks through the shared chunk runner (several in flight per
+    node) give the one-chunk output, and every node's lineage counts equal
+    the per-partition counts of its table."""
+    path, ds_min, ds_max = jset
+    out_a = str(tmp_path_factory.mktemp("jbf") / "one_chunk")
+    out_b = str(tmp_path_factory.mktemp("jbf") / "two_day_chunks")
+    JoinBackfill(spark, _join(path), out_a).run(ds_min, ds_max, step_days=365)
+    job = JoinBackfill(spark, _join(path), out_b)
+    res = job.run(ds_min, ds_max, step_days=2)
+    assert all(len(chunks) == 3 for chunks in res["computed"].values())
+    pd.testing.assert_frame_equal(_read(spark, out_a), _read(spark, out_b))
+
+    nodes = [(job.part_lineages[p], job.part_paths[p]) for p in job.part_paths]
+    for lineage, table in nodes + [(job.merge_lineage, job.merged_path)]:
+        observed = {}
+        for r in lineage.records():
+            observed.update(r["rows_per_partition"])
+        assert observed == _counts_by_ds(spark, table), table
+
+
+def test_release_caches_is_per_thread(spark, jset):
+    """Two threads run compute_join with minted row ids (each pins its
+    left); one releases its caches while the other's result is not yet
+    materialized. The other thread's pins must survive, and both results
+    must equal a single-threaded run."""
+    import dataclasses
+    import threading
+
+    from zipline_chronon_spark.operators import join as join_ops
+
+    path, _, _ = jset
+    j = dataclasses.replace(_join(path), row_ids=())  # minted ids
+
+    def collect(df):
+        return df.toPandas().sort_values("event_id").reset_index(drop=True)
+
+    want = collect(join_ops.compute_join(spark, j))
+    join_ops.release_caches()
+
+    barrier = threading.Barrier(2, timeout=600)
+    got, pinned, errors = {}, {}, []
+
+    def late():  # materializes its result after the other thread released
+        try:
+            out = join_ops.compute_join(spark, j)
+            barrier.wait()  # both lefts pinned
+            barrier.wait()  # the other thread has released its caches
+            pinned["late"] = [f.is_cached for f in join_ops._PERSISTED.frames]
+            got["late"] = collect(out)
+            join_ops.release_caches()
+        except Exception as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+            barrier.abort()
+
+    def early():  # releases as soon as its own result is collected
+        try:
+            got["early"] = collect(join_ops.compute_join(spark, j))
+            barrier.wait()
+            join_ops.release_caches()
+            pinned["early"] = list(join_ops._PERSISTED.frames)
+            barrier.wait()
+        except Exception as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+            barrier.abort()
+
+    threads = [threading.Thread(target=fn) for fn in (late, early)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    assert pinned == {"late": [True], "early": []}
+    pd.testing.assert_frame_equal(got["late"], want)
+    pd.testing.assert_frame_equal(got["early"], want)

@@ -35,6 +35,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class Catalog(ABC):
@@ -69,6 +70,10 @@ class ParquetWarehouse(Catalog):
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
+        # per table, the schema this instance last wrote: autoExpand then
+        # needs no mergeSchema footer scan (a Spark job) per insert.
+        # Forgotten on archive().
+        self._schemas: dict[str, StructType] = {}
 
     def exists(self, table: str) -> bool:
         if not os.path.isdir(table):
@@ -96,17 +101,22 @@ class ParquetWarehouse(Catalog):
 
     def insert_partitions(self, df: DataFrame, table: str,
                           partition_col: str = "ds") -> None:
-        if self.exists(table):
-            df = self._auto_expand(df, table)
+        key = os.path.normpath(table)
+        existing = self._schemas.get(key)
+        if existing is None and self.exists(table):
+            existing = self.read(table).schema
+        if existing is not None:
+            df = self._auto_expand(df, existing)
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
             .parquet(table)
         )
+        self._schemas[key] = df.schema
 
-    def _auto_expand(self, df: DataFrame, table: str) -> DataFrame:
-        existing = self.read(table).schema
+    @staticmethod
+    def _auto_expand(df: DataFrame, existing: StructType) -> DataFrame:
         have = {f.name for f in df.schema.fields}
         # table columns the incoming frame lacks -> null-filled (autoExpand
         # keeps old columns alive); new df columns simply extend the schema
@@ -116,6 +126,7 @@ class ParquetWarehouse(Catalog):
         return df
 
     def archive(self, table: str, reason: str = "") -> Optional[str]:
+        self._schemas.pop(os.path.normpath(table), None)
         if not os.path.isdir(table):
             return None
         stamp = datetime.now(tz=timezone.utc).strftime("%Y%m%d%H%M%S%f")

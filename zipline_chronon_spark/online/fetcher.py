@@ -590,7 +590,8 @@ def finalize_part(p, irs: list[dict], evs: list[dict]):
         if sk is None:
             return None
         if op == Operation.APPROX_UNIQUE_COUNT:
-            return int(round(sk.estimate()))
+            # all-null inputs leave an empty sketch: NULL, as offline
+            return int(round(sk.estimate())) or None
         if op in _FREQ:
             return sk.top_k(p.k or 1,
                             no_false_positives=op == Operation.APPROX_HEAVY_HITTERS_K)

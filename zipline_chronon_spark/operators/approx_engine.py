@@ -331,7 +331,9 @@ class _PrefixSketch:
 
 def _finalize_sketch(op: Operation, sk, k: int, nfp: bool, pcts):
     if op == Operation.APPROX_UNIQUE_COUNT:
-        return int(round(sk.estimate()))
+        # a distinct count of a non-empty set is at least 1: 0 means the
+        # window held only nulls, which renders NULL as in compute_group_by
+        return int(round(sk.estimate())) or None
     if op in fl._FREQ:
         return dict(sk.top_k(k, no_false_positives=nfp))
     return sk.quantiles(pcts)
@@ -723,7 +725,7 @@ def _make_group_server(parts, inputs, out_fields, keys, ir_map=None):
                                     bprev = bi
                                 out[q0 + i] = _finalize_sketch(op, work, k, nfp, pcts)
                             elif created:
-                                out[q0 + i] = len(sset)
+                                out[q0 + i] = len(sset) or None
                         continue
                     if op == Operation.APPROX_PERCENTILE and (
                             work is None or not any(

@@ -23,6 +23,7 @@ per part inside the PIT engine.
 
 from __future__ import annotations
 
+import threading
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,23 +35,29 @@ from zipline_chronon_spark.operators import pit_join
 ROW_ID = pit_join.ROW_ID
 MS_DAY = 86_400_000
 
-# persisted-subtree registry (same lifecycle idiom as operators/dedup.py):
-# _snapshot_events_part pins its (key x day) query frame and compute_join
-# pins a minted-id left — both must stay cached until the join OUTPUT is
-# materialized (the persist is what makes monotonically_increasing_id stable
-# across plan branches), after which a long-lived session should call
-# release_caches(). plans/join_backfill.py does so after every chunk write.
-_PERSISTED: list[DataFrame] = []
+# persisted-subtree registry, one per thread (same lifecycle idiom as
+# operators/dedup.py): compute_join pins a minted-id left, which must stay
+# cached until the join OUTPUT is materialized (the persist is what makes
+# monotonically_increasing_id stable across plan branches), after which a
+# long-lived session should call release_caches(). plans/backfill.py does so
+# after every chunk write, on the chunk's own thread: a registry shared by
+# threads would let one chunk unpersist a left another chunk still reads.
+class _Pinned(threading.local):
+    def __init__(self):
+        self.frames: list[DataFrame] = []
+
+
+_PERSISTED = _Pinned()
 
 
 def release_caches() -> None:
-    """Unpersist every frame pinned by compute_join/_snapshot_events_part.
+    """Unpersist every frame this thread pinned in compute_join.
 
     Only call AFTER the join result has been materialized (written or
     collected): the persisted frames pin minted row ids, and dropping them
     earlier would re-mint ids differently per plan branch."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
+    while _PERSISTED.frames:
+        _PERSISTED.frames.pop().unpersist()
 
 
 def _snapshot_events_part(
@@ -245,7 +252,7 @@ def compute_join(
         left = left.withColumn(ROW_ID, F.monotonically_increasing_id())
         if id_crosses_branches:
             left = left.persist()
-            _PERSISTED.append(left)
+            _PERSISTED.frames.append(left)
             left.count()  # materialize so every branch sees identical ids
     else:
         rid = F.xxhash64(*join.row_ids)

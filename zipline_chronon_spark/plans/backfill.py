@@ -4,9 +4,10 @@ Reimplements the reference's incremental-computation design
 (unfilledRanges output-vs-input partition diffing,
 catalog/TableUtils.scala:415-499; stepDays chunking, GroupBy.scala:898-921;
 semantic-hash invalidation, JoinUtils.scala:293-329) on a partitioned
-parquet warehouse (Iceberg-ready: the write path is isolated in
-``_write_partition`` — swap for ``writeTo(...).overwritePartitions()`` when
-an Iceberg catalog is configured; this sandbox has no Iceberg runtime jar).
+parquet warehouse (Iceberg-ready: every write goes through the catalog
+seam, ``catalog.py`` — swap ``ParquetWarehouse`` for ``IcebergCatalog``
+when an Iceberg catalog is configured; this sandbox has no Iceberg runtime
+jar).
 
 Contract (north rule):
  - rerunning a killed backfill recomputes ONLY missing date partitions,
@@ -14,6 +15,18 @@ Contract (north rule):
  - every chunk appends a lineage record: partition range, row count, wall
    seconds, spec hash, status — the per-partition metrics table,
  - a changed spec (semantic hash) invalidates all previous partitions.
+
+One chunk runner (``fill``) serves all three drivers (GroupByBackfill,
+JoinBackfill's part and merge tables, StagingQueryJob). Each chunk is ONE
+engine+write query: its per-partition row counts come from an Observation
+on the written frame, not from reading the table back. ``CHUNKS_IN_FLIGHT``
+chunks run at once, each on its own thread; Spark's FIFO scheduler still
+runs the earlier chunk's tasks first, so the next chunk is planned, scanned
+and shuffled on the cores the current chunk's straggler task (a hot key)
+leaves idle. Hence lineage records land in completion order and their
+``wall_sec`` spans overlap. On the first failure, chunks not yet started
+are cancelled, the in-flight ones finish and are recorded, and the error
+is re-raised.
 
 Windows look back across chunk boundaries: each chunk scans events from
 ``chunk_start − maxWindow`` but emits feature rows only inside the chunk
@@ -27,17 +40,23 @@ import dataclasses
 import hashlib
 import json
 import os
+import threading
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from datetime import date, datetime, timedelta, timezone
-from typing import Optional
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from zipline_chronon_spark.api import GroupBy
+from zipline_chronon_spark.operators import join as join_ops
 from zipline_chronon_spark.operators import pit_join
 
 MS_DAY = 86_400_000
+# chunks computed and written concurrently (see the module docstring)
+CHUNKS_IN_FLIGHT = 2
 
 
 def spec_hash(spec) -> str:
@@ -61,10 +80,6 @@ def _ds_to_ms(ds: str) -> int:
     return int(datetime.strptime(ds, "%Y-%m-%d").replace(tzinfo=timezone.utc).timestamp() * 1000)
 
 
-def _ms_to_ds(ms: int) -> str:
-    return datetime.fromtimestamp(ms / 1000, tz=timezone.utc).strftime("%Y-%m-%d")
-
-
 def date_range(start_ds: str, end_ds: str) -> list[str]:
     d0, d1 = date.fromisoformat(start_ds), date.fromisoformat(end_ds)
     return [(d0 + timedelta(days=i)).isoformat() for i in range((d1 - d0).days + 1)]
@@ -76,6 +91,7 @@ class Lineage:
 
     def __init__(self, path: str):
         self.path = path
+        self._lock = threading.Lock()
 
     def records(self) -> list[dict]:
         if not os.path.exists(self.path):
@@ -91,9 +107,107 @@ class Lineage:
         return filled
 
     def append(self, record: dict) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "a") as f:
-            f.write(json.dumps(record) + "\n")
+        with self._lock:  # chunk threads finish concurrently
+            os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+            with open(self.path, "a") as f:
+                f.write(json.dumps(record) + "\n")
+
+
+def unfilled(catalog, table: str, lineage: Lineage, h: str,
+             start_ds: str, end_ds: str) -> list[str]:
+    """Output-vs-requested partition diff (unfilledRanges,
+    TableUtils.scala:415-499): filled = lineage says success under spec
+    hash ``h`` AND the partition physically exists in the table (robust to
+    manual partition deletion)."""
+    want = date_range(start_ds, end_ds)
+    have = lineage.filled_partitions(h)
+    if have:
+        have &= set(catalog.partitions(table))
+    return [ds for ds in want if ds not in have]
+
+
+def chunks(ds_list: list[str], step_days: int) -> list[list[str]]:
+    """Contiguous runs, each at most step_days long (PartitionRange.steps)."""
+    out: list[list[str]] = []
+    run: list[str] = []
+    for ds in ds_list:
+        if run and (date.fromisoformat(ds) - date.fromisoformat(run[-1])).days == 1 \
+                and len(run) < step_days:
+            run.append(ds)
+        else:
+            if run:
+                out.append(run)
+            run = [ds]
+    if run:
+        out.append(run)
+    return out
+
+
+def fill(spark: SparkSession, catalog, table: str, lineage: Lineage, h: str,
+         start_ds: str, end_ds: str, step_days: int,
+         compute: Callable[[str, str], DataFrame],
+         partition_col: str = "ds", node: Optional[str] = None) -> dict:
+    """Bring ``table`` up to date over [start_ds, end_ds] under spec hash
+    ``h``: archive it if an earlier spec filled it (TableUtils autoArchive /
+    JoinUtils.scala:293-329 tablesToRecompute), then compute and write every
+    unfilled chunk with ``compute(ds_from, ds_to)``. Returns the computed
+    chunks' lineage records in chunk order, the archive location and the
+    number of requested partitions skipped."""
+    stale = [r for r in lineage.records()
+             if r["status"] == "success" and r["spec_hash"] != h]
+    # the lineage moves with the table directory: nothing else to reset
+    archived = catalog.archive(table, reason="spec_hash_changed") if stale else None
+    todo = chunks(unfilled(catalog, table, lineage, h, start_ds, end_ds), step_days)
+
+    def one(chunk: list[str]) -> dict:
+        t0 = time.time()
+        try:
+            obs = Observation()
+            part = F.col(partition_col).cast("string")
+            df = compute(chunk[0], chunk[-1]).observe(
+                obs, *(F.count_if(part == ds).alias(ds) for ds in chunk))
+            catalog.insert_partitions(df, table, partition_col=partition_col)
+            rows_per_ds = {ds: int(n) for ds, n in obs.get.items() if n}
+        finally:
+            # the chunk is on disk (or failed): drop the frames its plan
+            # pinned (a minted-id left), so a long resumable backfill does
+            # not keep them cached for the job's lifetime
+            join_ops.release_caches()
+        rec = {
+            **({"node": node} if node else {}),
+            "partitions": chunk,
+            "rows_per_partition": rows_per_ds,
+            "rows": int(sum(rows_per_ds.values())),
+            "wall_sec": round(time.time() - t0, 3),
+            "spec_hash": h,
+            "status": "success",
+            "finished_at": datetime.now(tz=timezone.utc).isoformat(),
+        }
+        lineage.append(rec)
+        return rec
+
+    # chunk threads inherit the caller's job group, description and local
+    # properties
+    target = inheritable_thread_target(spark)(one)
+    futures = []
+    with ThreadPoolExecutor(CHUNKS_IN_FLIGHT) as pool:
+        for chunk in todo:
+            running = [f for f in futures if not f.done()]
+            if len(running) == CHUNKS_IN_FLIGHT:
+                wait(running, return_when=FIRST_COMPLETED)
+            if any(f.done() and f.exception() for f in futures):
+                # start no further chunk; leaving the pool waits for the
+                # ones in flight, which record their lineage
+                break
+            futures.append(pool.submit(target, chunk))
+    for f in futures:
+        if f.exception() is not None:
+            raise f.exception()
+    done = [f.result() for f in futures]
+    return {"computed_chunks": done,
+            "archived": archived,
+            "skipped": len(date_range(start_ds, end_ds)) - sum(
+                len(c["partitions"]) for c in done)}
 
 
 class GroupByBackfill:
@@ -126,32 +240,8 @@ class GroupByBackfill:
         self.hash = spec_hash(gb)
 
     def unfilled(self, start_ds: str, end_ds: str) -> list[str]:
-        """Output-vs-requested partition diff (unfilledRanges,
-        TableUtils.scala:415-499): filled = lineage says success under the
-        current spec hash AND the partition physically exists in the table
-        (robust to manual partition deletion)."""
-        want = date_range(start_ds, end_ds)
-        have = self.lineage.filled_partitions(self.hash)
-        if have:
-            have &= set(self.catalog.partitions(self.output_path))
-        return [ds for ds in want if ds not in have]
-
-    @staticmethod
-    def _chunks(ds_list: list[str], step_days: int) -> list[list[str]]:
-        """Contiguous runs, each at most step_days long (PartitionRange.steps)."""
-        out: list[list[str]] = []
-        run: list[str] = []
-        for ds in ds_list:
-            if run and (date.fromisoformat(ds) - date.fromisoformat(run[-1])).days == 1 \
-                    and len(run) < step_days:
-                run.append(ds)
-            else:
-                if run:
-                    out.append(run)
-                run = [ds]
-        if run:
-            out.append(run)
-        return out
+        return unfilled(self.catalog, self.output_path, self.lineage, self.hash,
+                        start_ds, end_ds)
 
     def _compute_chunk(self, ds_from: str, ds_to: str) -> DataFrame:
         q_lo = _ds_to_ms(ds_from)
@@ -171,51 +261,6 @@ class GroupByBackfill:
             "ds", F.date_format(F.col("__out_ts").cast("timestamp"), "yyyy-MM-dd")
         ).drop("__out_ts")
 
-    def _archive_if_spec_changed(self) -> Optional[str]:
-        """A changed semantic hash invalidates every existing partition:
-        archive the table (TableUtils autoArchive / JoinUtils.scala:293-329
-        tablesToRecompute) and start a fresh lineage under the new hash."""
-        stale = [r for r in self.lineage.records()
-                 if r["status"] == "success" and r["spec_hash"] != self.hash]
-        if not stale:
-            return None
-        dest = self.catalog.archive(self.output_path, reason="spec_hash_changed")
-        # lineage moved with the table directory; nothing else to reset
-        return dest
-
     def run(self, start_ds: str, end_ds: str, step_days: int = 30) -> dict:
-        archived = self._archive_if_spec_changed()
-        todo = self.unfilled(start_ds, end_ds)
-        done: list[dict] = []
-        for chunk in self._chunks(todo, step_days):
-            ds_from, ds_to = chunk[0], chunk[-1]
-            t0 = time.time()
-            df = self._compute_chunk(ds_from, ds_to)
-            self._write_partition(df)
-            # partition values read back type-inferred (date) — normalize to str
-            rows_per_ds = {
-                str(r["ds"]): int(r["n"])
-                for r in self.catalog.read(self.output_path)
-                .where(F.col("ds").cast("string").isin(chunk))
-                .groupBy(F.col("ds").cast("string").alias("ds"))
-                .agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            rec = {
-                "partitions": chunk,
-                "rows_per_partition": rows_per_ds,
-                "rows": int(sum(rows_per_ds.values())),
-                "wall_sec": round(time.time() - t0, 3),
-                "spec_hash": self.hash,
-                "status": "success",
-                "finished_at": datetime.now(tz=timezone.utc).isoformat(),
-            }
-            self.lineage.append(rec)
-            done.append(rec)
-        return {"computed_chunks": done,
-                "archived": archived,
-                "skipped": len(date_range(start_ds, end_ds)) - sum(
-                    len(c["partitions"]) for c in done)}
-
-    def _write_partition(self, df: DataFrame) -> None:
-        # all writes go through the catalog seam (Iceberg = constructor swap)
-        self.catalog.insert_partitions(df, self.output_path, partition_col="ds")
+        return fill(self.spark, self.catalog, self.output_path, self.lineage,
+                    self.hash, start_ds, end_ds, step_days, self._compute_chunk)

@@ -26,14 +26,14 @@ right), and the merge is N equi-joins on the deterministic row id within
 one date chunk — no cross-chunk shuffle. A spec change on ONE part
 archives and recomputes only that part's table; the merge lineage hash
 covers the full join, so merged partitions rebuild from the (mostly
-already-filled) part tables.
+already-filled) part tables. Nodes run one after another; within a node,
+the chunks go through the shared chunk runner (plans/backfill.py
+``fill``), several in flight.
 """
 
 from __future__ import annotations
 
 import os
-import time
-from datetime import datetime, timezone
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +53,7 @@ from zipline_chronon_spark.plans.backfill import (
     Lineage,
     _ds_to_ms,
     date_range,
+    fill,
     spec_hash,
 )
 
@@ -132,62 +133,13 @@ class JoinBackfill:
                 f"left source).")
         self._uniq_checked.add(rng)
 
-    # -- generic partition-diffed runner -------------------------------------
-
-    def _unfilled(self, lineage: Lineage, path: str, h: str,
-                  start_ds: str, end_ds: str) -> list[str]:
-        want = date_range(start_ds, end_ds)
-        have = lineage.filled_partitions(h)
-        if have:
-            have &= set(self.catalog.partitions(path))
-        return [ds for ds in want if ds not in have]
-
-    def _archive_if_changed(self, lineage: Lineage, path: str, h: str) -> Optional[str]:
-        stale = [r for r in lineage.records()
-                 if r["status"] == "success" and r["spec_hash"] != h]
-        if not stale:
-            return None
-        return self.catalog.archive(path, reason="spec_hash_changed")
+    # -- per-node runner ------------------------------------------------------
 
     def _run_node(self, name: str, lineage: Lineage, path: str, h: str,
                   start_ds: str, end_ds: str, step_days: int,
                   compute_chunk) -> list[dict]:
-        from zipline_chronon_spark.plans.backfill import GroupByBackfill
-
-        self._archive_if_changed(lineage, path, h)
-        todo = self._unfilled(lineage, path, h, start_ds, end_ds)
-        done: list[dict] = []
-        for chunk in GroupByBackfill._chunks(todo, step_days):
-            ds_from, ds_to = chunk[0], chunk[-1]
-            t0 = time.time()
-            df = compute_chunk(ds_from, ds_to)
-            self.catalog.insert_partitions(df, path, partition_col="ds")
-            # the chunk is on disk: release frames the part engine pinned
-            # (snapshot qd / minted left) so a long resumable backfill does
-            # not accumulate cached partitions for the whole job lifetime
-            from zipline_chronon_spark.operators import join as join_ops
-
-            join_ops.release_caches()
-            rows_per_ds = {
-                str(r["ds"]): int(r["n"])
-                for r in self.catalog.read(path)
-                .where(F.col("ds").cast("string").isin(chunk))
-                .groupBy(F.col("ds").cast("string").alias("ds"))
-                .agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            rec = {
-                "node": name,
-                "partitions": chunk,
-                "rows_per_partition": rows_per_ds,
-                "rows": int(sum(rows_per_ds.values())),
-                "wall_sec": round(time.time() - t0, 3),
-                "spec_hash": h,
-                "status": "success",
-                "finished_at": datetime.now(tz=timezone.utc).isoformat(),
-            }
-            lineage.append(rec)
-            done.append(rec)
-        return done
+        return fill(self.spark, self.catalog, path, lineage, h, start_ds, end_ds,
+                    step_days, compute_chunk, node=name)["computed_chunks"]
 
     # -- nodes ----------------------------------------------------------------
 

@@ -89,36 +89,16 @@ class StagingQueryJob:
         self.hash = spec_hash(sq)
 
     def unfilled(self, start_ds: str, end_ds: str) -> list[str]:
-        from zipline_chronon_spark.plans.backfill import date_range
+        from zipline_chronon_spark.plans.backfill import unfilled
 
-        want = date_range(start_ds, end_ds)
-        have = self.lineage.filled_partitions(self.hash)
-        if have:
-            have &= set(self.catalog.partitions(self.output_path))
-        return [ds for ds in want if ds not in have]
+        return unfilled(self.catalog, self.output_path, self.lineage, self.hash,
+                        start_ds, end_ds)
 
     def run(self, start_ds: str, end_ds: str, step_days: int = 30,
             latest_date: Optional[str] = None) -> dict:
-        import time
-        from datetime import datetime, timezone
+        from zipline_chronon_spark.plans.backfill import fill
 
-        from pyspark.sql import functions as F
-
-        from zipline_chronon_spark.plans.backfill import GroupByBackfill, date_range
-
-        # changed query text/setups -> archive + full recompute
-        stale = [r for r in self.lineage.records()
-                 if r["status"] == "success" and r["spec_hash"] != self.hash]
-        archived = (self.catalog.archive(self.output_path,
-                                         reason="spec_hash_changed")
-                    if stale else None)
-        for stmt in self.sq.setups:
-            self.spark.sql(stmt)
-        done: list[dict] = []
-        for chunk in GroupByBackfill._chunks(self.unfilled(start_ds, end_ds),
-                                             step_days):
-            ds_from, ds_to = chunk[0], chunk[-1]
-            t0 = time.time()
+        def compute(ds_from: str, ds_to: str) -> DataFrame:
             df = self.spark.sql(render(self.spark, self.sq, ds_from, ds_to,
                                        latest_date))
             if self.partition_col not in df.columns:
@@ -126,26 +106,12 @@ class StagingQueryJob:
                     f"StagingQuery {self.sq.name} output lacks partition "
                     f"column '{self.partition_col}' — a resumable staging "
                     f"table must be date-partitioned (columns: {df.columns})")
-            self.catalog.insert_partitions(df, self.output_path,
-                                           partition_col=self.partition_col)
-            rows_per_ds = {
-                str(r["ds"]): int(r["n"])
-                for r in self.catalog.read(self.output_path)
-                .where(F.col(self.partition_col).cast("string").isin(chunk))
-                .groupBy(F.col(self.partition_col).cast("string").alias("ds"))
-                .agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            rec = {
-                "partitions": chunk,
-                "rows_per_partition": rows_per_ds,
-                "rows": int(sum(rows_per_ds.values())),
-                "wall_sec": round(time.time() - t0, 3),
-                "spec_hash": self.hash,
-                "status": "success",
-                "finished_at": datetime.now(tz=timezone.utc).isoformat(),
-            }
-            self.lineage.append(rec)
-            done.append(rec)
-        return {"computed_chunks": done, "archived": archived,
-                "skipped": len(date_range(start_ds, end_ds)) - sum(
-                    len(c["partitions"]) for c in done)}
+            return df
+
+        # a changed query text/setups archives the table (inside fill); the
+        # setups run once, before any chunk
+        for stmt in self.sq.setups:
+            self.spark.sql(stmt)
+        return fill(self.spark, self.catalog, self.output_path, self.lineage,
+                    self.hash, start_ds, end_ds, step_days, compute,
+                    partition_col=self.partition_col)
